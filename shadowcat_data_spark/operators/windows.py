@@ -37,8 +37,12 @@ def ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank/dense_rank (real ties) + row_number (unique ordering)."""
     li = load_table(spark, sf_dir, "lineitem")
     w_ties = W.partitionBy("l_returnflag").orderBy(F.col("l_quantity").desc())
+    # ascending tiebreakers sort NULLs last like the oracle (DuckDB's
+    # default); Spark's ascending default would put them first
     w_uniq = W.partitionBy("l_returnflag").orderBy(
-        F.col("l_quantity").desc(), "l_orderkey", "l_linenumber"
+        F.col("l_quantity").desc(),
+        F.asc_nulls_last("l_orderkey"),
+        F.asc_nulls_last("l_linenumber"),
     )
     return li.select(
         "l_orderkey",
@@ -69,8 +73,10 @@ QUALIFY ROW_NUMBER() OVER (
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 line items per supplier (rank-filter; map-side safe at scale)."""
     li = load_table(spark, sf_dir, "lineitem")
-    w = W.partitionBy("l_suppkey").orderBy(
-        F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber"
+    w = W.partitionBy("l_suppkey").orderBy(  # NULLs last: see w1_ranking
+        F.col("l_extendedprice").desc(),
+        F.asc_nulls_last("l_orderkey"),
+        F.asc_nulls_last("l_linenumber"),
     )
     return (
         li.withColumn("rn", F.row_number().over(w))

@@ -1115,8 +1115,17 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     row can blow up a task at any corpus scale; collect_set dedups
     per-order suppliers exactly as the old DISTINCT did, and sort_array
     gives the u < v orientation, so the edge SET is identical (both
-    graph oracles stay hash-green)."""
-    ps = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    graph oracles stay hash-green).
+
+    NULL-orderkey lines belong to no order and are dropped before the
+    groupBy, which would otherwise collect them all into one phantom order
+    (the oracle's self-join on the key drops them: NULL never equals NULL).
+    NULL suppliers need no filter: collect_set skips them."""
+    ps = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey")
+        .filter(F.col("l_orderkey").isNotNull())
+    )
     sups = ps.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_suppkey")).alias("ss")
     )

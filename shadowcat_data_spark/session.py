@@ -92,6 +92,24 @@ _DYNAMIC_CONFS = {
 }
 
 
+# Entries in the JVM-wide generated-class cache (an LRU keyed on the
+# generated source). Spark's default of 100 is smaller than the set of
+# classes one pass of a mixed query load cycles through — bench.py's 12
+# headline queries compile ~183 — and a cyclic access pattern larger than
+# an LRU misses on every lookup, so every warm pass recompiled every class
+# through Janino, on the driver and again inside tasks
+# (tests/test_codegen_cache.py). An entry retains ~25 KB of driver heap
+# (measured: retained heap after full GCs with the headline mix at sf0.01
+# cached under 1 vs 1024 entries, 75.9 → 80.3 MB for 182 more entries),
+# so 1024 such entries hold ~25 MB, ~1% of a 2g driver heap; past the cap
+# the LRU evicts exactly as before, so the bound holds for any number of
+# queries. The conf is STATIC: it only takes effect through get_spark's
+# builder, and a driver-owned session keeps whatever its owner set
+# (Spark's 100 by default) — ensure_session cannot change it on a running
+# JVM.
+CODEGEN_CACHE_ENTRIES = 1024
+
+
 def effective_cpus() -> int:
     """CPUs this process can actually burn: min of os.cpu_count, the
     scheduler affinity mask, and the cgroup (v2 then v1) CPU quota.
@@ -135,6 +153,7 @@ def get_spark(app_name: str = "shadowcat_data_spark") -> SparkSession:
         # locally. (On a real cluster with many files, leave this at default.)
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # keep managed-table test artifacts (m7 catalog round-trip) out of
         # the repo tree — the default ./spark-warehouse accumulates one
         # sc_*.db per scratch sf_dir across test sessions
@@ -172,10 +191,25 @@ def ensure_session(spark: SparkSession) -> SparkSession:
 _SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
+def _file_sig(path: str) -> tuple:
+    """(size, mtime_ns, last 16 bytes) of one file. The tail is the parquet
+    footer length + magic: (size, mtime_ns) alone misses a same-size
+    replacement with preserved timestamps (cp -p / rsync -a / archive
+    extraction — ADVICE r11), while a different schema or row content
+    virtually always moves the footer."""
+    st = os.stat(path)
+    with open(path, "rb") as fh:
+        fh.seek(max(0, st.st_size - 16))
+        tail = fh.read(16)
+    return (st.st_size, st.st_mtime_ns, tail)
+
+
 def _fs_sig(root: str) -> tuple | None:
-    """Filesystem identity of a fixture path: (size, mtime_ns, file tail)
-    of the file, or (name, size, mtime_ns) of every file under it when it
-    is a directory-style parquet table.
+    """Filesystem identity of a fixture path: the :func:`_file_sig` of the
+    file, or (path relative to the root, file sig) of every file under it
+    when it is a directory-style parquet table — the relative path, not
+    the basename, so moving a part file into another (partition)
+    subdirectory moves the signature too.
 
     Returns ``None`` — caller must BYPASS the memo — when the path is not
     a local filesystem path this process can stat (URI schemes like
@@ -184,28 +218,18 @@ def _fs_sig(root: str) -> tuple | None:
     and pin the first-seen schema across fixture regenerations (VERDICT
     r11 #3); plain inference is the correct cluster behavior, and cluster
     tables should carry their schema in a manifest anyway (the lakehouse
-    reads already do).
-
-    For single-file fixtures the signature also folds in the last 16
-    bytes of the file (parquet footer length + magic): (size, mtime_ns)
-    alone misses a same-size replacement with preserved timestamps
-    (cp -p / rsync -a / archive extraction — ADVICE r11), while a
-    different schema or row content virtually always moves the footer."""
+    reads already do)."""
     if "://" in root:
         return None
     if os.path.isfile(root):
-        st = os.stat(root)
-        with open(root, "rb") as fh:
-            fh.seek(max(0, st.st_size - 16))
-            tail = fh.read(16)
-        return (st.st_size, st.st_mtime_ns, tail)
+        return _file_sig(root)
     if not os.path.isdir(root):
         return None
     parts = []
     for dirpath, _dirs, files in sorted(os.walk(root)):
         for fn in sorted(files):
-            st = os.stat(os.path.join(dirpath, fn))
-            parts.append((fn, st.st_size, st.st_mtime_ns))
+            path = os.path.join(dirpath, fn)
+            parts.append((os.path.relpath(path, root), _file_sig(path)))
     return tuple(parts)
 
 
@@ -283,7 +307,7 @@ def materialize(df: DataFrame, eager: bool = False, iterative: bool = False) -> 
     if sc.master.startswith("local"):
         return df.localCheckpoint(eager=eager)
     if iterative:
-        if sc._jsc.sc().getCheckpointDir().isDefined():
+        if sc.getCheckpointDir() is not None:
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
     from pyspark.storagelevel import StorageLevel

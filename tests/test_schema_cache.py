@@ -1,18 +1,19 @@
 """load_table's fixture-schema memo (r11): schema inference is skipped on
 a filesystem-identical re-load and re-runs when the fixture changes.
 
-The memo caches METADATA only (the inferred StructType, keyed on the file
-set's sizes+mtimes). These tests pin the three contracts: (1) a cache hit
-serves the identical schema and identical rows, (2) a REGENERATED fixture
-(same path, new bytes) is re-inferred — never served a stale schema, and
-(3) the events nanos/micros timestamp normalization still applies on the
-cached path."""
+The memo caches METADATA only (the inferred StructType, keyed on each
+file's relative path, size, mtime and footer tail). These tests pin the
+three contracts: (1) a cache hit serves the identical schema and
+identical rows, (2) a REGENERATED fixture (same path, new bytes) is
+re-inferred — never served a stale schema, and (3) the events
+nanos/micros timestamp normalization still applies on the cached path."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from shadowcat_data_spark import session as S
@@ -79,6 +80,46 @@ def test_same_size_preserved_mtime_replacement_reinfers(spark, tmp_path):
     assert os.stat(path).st_size == st.st_size
     assert os.stat(path).st_mtime_ns == st.st_mtime_ns
     assert sig_a != sig_b  # the memo key moves → re-inference, not a hit
+
+
+def _part_table(root, parts):
+    """A directory-style parquet table: one small part file per relative
+    path in ``parts``."""
+    for i, rel in enumerate(parts):
+        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+        pd.DataFrame({"id": range(i, i + 3)}).to_parquet(os.path.join(root, rel))
+
+
+def test_directory_part_same_size_replacement_reinfers(tmp_path):
+    # ADVICE r12: the directory branch keys every part file the way the
+    # single-file branch does, so a part replaced by a same-size file with
+    # preserved timestamps moves the memo key.
+    root = str(tmp_path / "t.parquet")
+    _part_table(root, ["part-0.parquet", "part-1.parquet"])
+    part = os.path.join(root, "part-1.parquet")
+    st = os.stat(part)
+    sig_a = S._fs_sig(root)
+    with open(part, "r+b") as fh:
+        fh.seek(st.st_size - 5)
+        tail = fh.read(5)
+        fh.seek(st.st_size - 5)
+        fh.write(bytes(b ^ 0xFF for b in tail))
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(part).st_size == st.st_size
+    assert os.stat(part).st_mtime_ns == st.st_mtime_ns
+    assert S._fs_sig(root) != sig_a
+
+
+def test_directory_part_moved_to_other_subdir_reinfers(tmp_path):
+    # A same-named part file moved into another partition directory keeps
+    # its name, size and mtime; only its path relative to the root moves.
+    root = str(tmp_path / "t.parquet")
+    _part_table(root, ["k=1/part-0.parquet", "k=2/part-1.parquet"])
+    sig_a = S._fs_sig(root)
+    os.makedirs(os.path.join(root, "k=3"))
+    os.rename(os.path.join(root, "k=2/part-1.parquet"), os.path.join(root, "k=3/part-1.parquet"))
+    os.rmdir(os.path.join(root, "k=2"))
+    assert S._fs_sig(root) != sig_a  # the memo key moves → re-inference
 
 
 def test_events_normalization_survives_cache(spark):

@@ -50,6 +50,20 @@ INJECT = {
         # them BEFORE aggregating (caught a real divergence in round 3)
         "(90000004, 2, 2, 1, 3.0, 4.0, 0.0, 0.0, '', 'F', TIMESTAMP '1995-06-01')",
         "(90000005, 2, 2, 2, 4.0, 6.0, 0.0, 0.0, NULL, 'F', TIMESTAMP '1995-06-01')",
+        # NULL join keys: suppliers 95000001/95000002 share 4 orders, one
+        # short of the co-supply graph's support-5 edge, and each has one
+        # NULL-orderkey line — grouping the NULL key as an order would add
+        # a phantom edge. Plus a NULL supplier on a real order and a line
+        # with both keys NULL.
+        *[
+            f"({o}, 3, {s}, {ln}, 1.0, 10.0, 0.0, 0.0, 'N', 'O', TIMESTAMP '1996-01-01')"
+            for o in range(90000010, 90000014)
+            for ln, s in enumerate((95000001, 95000002), 1)
+        ],
+        "(NULL, 3, 95000001, 1, 1.0, 10.0, 0.0, 0.0, 'N', 'O', TIMESTAMP '1996-01-01')",
+        "(NULL, 3, 95000002, 2, 1.0, 10.0, 0.0, 0.0, 'N', 'O', TIMESTAMP '1996-01-01')",
+        "(90000010, 3, NULL, 3, 1.0, 10.0, 0.0, 0.0, 'N', 'O', TIMESTAMP '1996-01-01')",
+        "(NULL, NULL, NULL, 1, 2.0, 20.0, 0.0, 0.0, 'R', 'F', TIMESTAMP '1996-01-01')",
     ],
     "orders": [
         "(91000001, NULL, NULL, NULL, NULL, NULL)",
